@@ -14,11 +14,15 @@ import graft.functions.expressions.{ArrayDot, ArrayJaccardFs, ArrayL2Sq, BloomMi
 import graft.operators.Sketches
 
 /** Session extensions: registers graft's native Catalyst expressions
-  * as SQL functions. Activate with
+  * as SQL functions ([[GraftExtensions.functions]]). Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` — then
   * `SELECT graft_simhash64(split(text, ' ')) FROM docs` works in
-  * plain SQL, and operators pick the codegen'd implementation over
-  * the Column-expression fallback automatically.
+  * plain SQL.
+  *
+  * The extension only exposes SQL names; it does not choose which
+  * kernel an operator runs. The Column API (`graft.functions`,
+  * `graft.operators`) builds the same expressions directly through
+  * `ColumnBridge`, so operators plan identically with or without it.
   *
   * The sketch-tier AGGREGATES register here too (the analyzer wraps a
   * builder-returned `AggregateFunction` into an `AggregateExpression`

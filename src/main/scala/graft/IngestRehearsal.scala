@@ -64,7 +64,7 @@ object IngestRehearsal {
     val outBase = args.lift(2).getOrElse("tmp/ingest_rehearsal")
     require(n >= 2 * b, s"corpus n=$n must cover the batch's planted seed ranges (need >= ${2 * b})")
     Rehearsals.rmTree(outBase)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -54,7 +54,7 @@ object IvfDriftRehearsal {
     val nprobe = 8
     val k = 10
     val dim = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

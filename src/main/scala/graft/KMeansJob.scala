@@ -59,8 +59,8 @@ object KMeansJob {
     val Array(mode, path, kStr) = args.take(3)
     val k = kStr.toInt
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .master(s"local[${Host.cpus}]")
+      .config("spark.sql.shuffle.partitions", Host.cpus)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -307,7 +307,7 @@ object PipelineJob {
     val (mode, in, out) = (args(0), args(1), args(2))
     // lazy: maintain-cohort's 4th argument is a PATH, not a number
     lazy val minQ = if (args.length > 3) args(3).toLong else 5000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Host.cpus
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -19,7 +19,7 @@ object PqOperatingPoint {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val lists = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
                 else Seq(100, 200, 400, 800)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

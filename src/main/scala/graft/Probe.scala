@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -92,7 +92,7 @@ object Probe {
         val verifyWork = cands.join(ta, "id_a").join(tb, "id_b")
           .select((size(col("toks_a")) + size(col("toks_b"))).as("w"),
             size(col("toks_a")).as("sa"), size(col("toks_b")).as("sb"),
-            call_function("graft_jaccard_fs", col("toks_a"), col("toks_b")).as("j"))
+            operators.Dedup.jaccardFs(col("toks_a"), col("toks_b")).as("j"))
           .persist()
         println("verify token work=" + verifyWork.agg(sum(col("w")), count(lit(1))).first())
         println("verified=" + verifyWork.filter(col("j") >= 9000).count())

@@ -157,7 +157,7 @@ object RelationalRehearsal {
     val s = args.lift(0).map(_.toInt).getOrElse(10)
     val outBase = args.lift(1).getOrElse("tmp/relational_rehearsal")
     val sz = Sizes(s)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

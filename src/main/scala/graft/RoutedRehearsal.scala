@@ -43,7 +43,7 @@ object RoutedRehearsal {
   def main(args: Array[String]): Unit = {
     val d = args.lift(0).map(_.toLong).getOrElse(1048576L)
     require(d % 4 == 0 && d >= 400, s"D=$d must be a multiple of 4, >= 400")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -116,7 +116,7 @@ object ScaleRehearsal {
     // and the nDocs=0 fast path deliberately reuses them.
     Rehearsals.rmTree(s"$outBase/warehouse")
     val megaN = 3000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

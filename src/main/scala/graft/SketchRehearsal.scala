@@ -47,7 +47,7 @@ object SketchRehearsal {
     require(n >= 2 * DistinctUids && n % 1000 == 0,
       s"n=$n must cover the uid space twice (half/half lifecycle) and divide by 1000")
     Rehearsals.rmTree(outBase)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -67,7 +67,7 @@ object SpanRehearsal {
   def main(args: Array[String]): Unit = {
     val d = args.lift(0).map(_.toLong).getOrElse(200000L)
     require(d % 4 == 0 && d >= 8, s"D=$d must be a multiple of 4, >= 8")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -53,7 +53,7 @@ object TemporalRehearsal {
     require(n % 300 == 0, s"n=$n must divide by 3 slots x 100 days")
     val base = n / 300
     Rehearsals.rmTree(outBase)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

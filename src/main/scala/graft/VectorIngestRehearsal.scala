@@ -52,7 +52,7 @@ object VectorIngestRehearsal {
     val outBase = args.lift(2).getOrElse("tmp/vector_ingest_rehearsal")
     require(n >= b, s"corpus n=$n must cover the batch's planted content range (need >= $b)")
     Rehearsals.rmTree(outBase)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

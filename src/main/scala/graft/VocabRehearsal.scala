@@ -49,7 +49,7 @@ object VocabRehearsal {
     val d = args.lift(0).map(_.toLong).getOrElse(1048576L)
     val merges = args.lift(1).map(_.toInt).getOrElse(3000)
     require(d % K == 0 && d >= 4L * K, s"D=$d must be a multiple of $K, >= ${4 * K}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -2,13 +2,17 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
+
+import graft.functions.expressions.{ArrayDot, ArrayL2Sq}
 
 /** Vector math as Catalyst `Column` expressions over `array<double>`.
   *
-  * Everything here compiles to higher-order-function expressions
-  * (`zip_with` / `aggregate` / `transform`) that stay inside
-  * WholeStageCodegen — no UDFs, no serialization boundary — so a
-  * 100 TB scan of embeddings evaluates these at full codegen speed.
+  * [[dot]] and [[l2sq]] build graft's native kernels
+  * ([[graft.functions.expressions.ArrayDot]] /
+  * [[graft.functions.expressions.ArrayL2Sq]]) directly, whatever the
+  * session's configuration; the rest are built-in Column expressions.
+  * No UDFs, no serialization boundary.
   *
   * Semantics mirror the distance math of the reference engine
   * (ScaleUnlimited/flink-streaming-kmeans: Euclidean nearest-centroid
@@ -25,27 +29,19 @@ object VectorFunctions {
     */
   def toDoubleArray(v: Column): Column = transform(v, _.cast("double"))
 
-  /** Pick the native codegen'd kernel when the active session has
-    * GraftExtensions; the HOF twin otherwise. Same sequential fold,
-    * bit-identical results (oracle-gated) — but the native kernel is
-    * one tight loop where the HOF is an interpreted lambda per
-    * element, and these sit in every embedding operator's hot path.
+  /** Sequential-fold dot product: sum_i a(i)*b(i) — the native
+    * [[graft.functions.expressions.ArrayDot]] kernel, one tight loop
+    * (no per-element lambda) in every embedding operator's hot path.
     */
-  private def nativeOr(name: String, a: Column, b: Column)(fallback: => Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .filter(_.catalog.functionExists(name))
-      .map(_ => call_function(name, a, b))
-      .getOrElse(fallback)
+  def dot(a: Column, b: Column): Column =
+    ColumnBridge.column(ArrayDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Sequential-fold dot product: sum_i a(i)*b(i). */
-  def dot(a: Column, b: Column): Column = nativeOr("graft_dot", a, b) {
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-  }
-
-  /** Squared Euclidean distance: sum_i (a(i)-b(i))^2. */
-  def l2sq(a: Column, b: Column): Column = nativeOr("graft_l2sq", a, b) {
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-  }
+  /** Squared Euclidean distance: sum_i (a(i)-b(i))^2 — the native
+    * [[graft.functions.expressions.ArrayL2Sq]] kernel (the k-means
+    * nearest-centroid step).
+    */
+  def l2sq(a: Column, b: Column): Column =
+    ColumnBridge.column(ArrayL2Sq(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** L2 norm. */
   def l2norm(a: Column): Column = sqrt(dot(a, a))

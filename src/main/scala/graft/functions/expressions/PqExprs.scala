@@ -32,9 +32,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * null-laced distance arrays there; no operator feeds either —
   * vectors come out of Pq.normalized null-free and dim-checked).
   *
-  * Constructed via the ColumnBridge (not the SQL registry): the
-  * codebook is a trained driver-side artifact, not a Column, so these
-  * work with or without GraftExtensions.
+  * Constructed via the ColumnBridge like every graft kernel the
+  * operators use; the codebook is a trained driver-side artifact, not
+  * a Column, so these have no SQL name.
   */
 abstract class PqBookExpr extends UnaryExpression {
   def dsub: Int

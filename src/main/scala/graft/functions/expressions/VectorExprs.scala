@@ -10,18 +10,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * every embedding operator (cosine verify in LSH dedup, brute/LSH/IVF
   * top-k ranking, k-means assignment).
   *
-  * The Column twins ([[graft.functions.VectorFunctions]]) are
-  * zip_with/aggregate higher-order functions, which Catalyst
-  * evaluates INTERPRETED (HOFs don't join whole-stage codegen) with a
-  * lambda-variable box per element. These expressions run the same
+  * [[graft.functions.VectorFunctions]] builds them directly. The
+  * zip_with/aggregate higher-order-function spelling of the same fold
+  * is evaluated INTERPRETED (HOFs don't join whole-stage codegen) with
+  * a lambda-variable box per element; these expressions run the same
   * sequential fold as one tight primitive loop per pair — and the
-  * fold order is identical, so results are bit-identical to the
-  * twins (oracle-gated on sim_topk_cosine / dedup_embed_cosine /
-  * kmeans keys).
+  * fold order is identical, so results are bit-identical to that
+  * spelling (parity spec in ExpressionsSpec; oracle-gated on
+  * sim_topk_cosine / dedup_embed_cosine / kmeans keys).
   *
-  * Null semantics match the twins: a null element or length mismatch
-  * makes zip_with produce a null product and the aggregate fold turn
-  * null — here the expression returns SQL NULL in those cases.
+  * Null semantics match the HOF spelling: a null element or length
+  * mismatch makes zip_with produce a null product and the aggregate
+  * fold turn null — here the expression returns SQL NULL in those
+  * cases.
   */
 abstract class VectorFold extends BinaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {

@@ -2,10 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 
 import graft.functions.HashFunctions._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
+import graft.functions.expressions.{ArrayJaccardFs, ArrayLDot, LatticeArgmin, SimhashMd5Chunks}
 
 /** Document deduplication for LLM-training-data pipelines: exact,
   * MinHash+LSH, SimHash, blocked n-gram Jaccard, blocked embedding
@@ -20,15 +22,13 @@ import graft.functions.VectorFunctions._
   */
 object Dedup {
 
-  /** Fixed-point Jaccard column: native one-pass expression when the
-    * session has GraftExtensions, Column-pair fallback otherwise.
-    * Both compute floor(10000.0 * (|A∩B| / |A∪B|)) bit-identically.
+  /** Fixed-point Jaccard column floor(10000.0 * (|A∩B| / |A∪B|)) —
+    * the native one-pass [[graft.functions.expressions.ArrayJaccardFs]]
+    * kernel (parity spec against the array_intersect/array_union
+    * spelling in ExpressionsSpec).
     */
-  private def jaccardFs(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("graft_jaccard_fs"))
-      call_function("graft_jaccard_fs", a, b)
-    else
-      floor(lit(10000.0) * (size(array_intersect(a, b)).cast("double") / size(array_union(a, b))))
+  private[graft] def jaccardFs(a: Column, b: Column): Column =
+    ColumnBridge.column(ArrayJaccardFs(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** Candidate pairs from a slim banded frame (doc_id, band, bucket):
     * the self-equi-join on the bucket key — the ONLY pair generator
@@ -289,7 +289,7 @@ object Dedup {
     // pair-verify map stage executes twice
     val verified = candidates.join(ta, "id_a").join(tb, "id_b")
       .select(col("id_a"), col("id_b"),
-        jaccardFs(docs0.sparkSession, col("toks_a"), col("toks_b")).as("jac_fs"))
+        jaccardFs(col("toks_a"), col("toks_b")).as("jac_fs"))
       .filter(col("jac_fs") >= minJaccardFs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // structural release: both operator-owned persists drop after the
@@ -409,7 +409,7 @@ object Dedup {
     val tb = shingled.select(col("doc_id").as("id_b"), col("toks").as("toks_b"))
     val verified = candidates.join(ta, "id_a").join(tb, "id_b")
       .select(col("id_a"), col("id_b"),
-        jaccardFs(docs0.sparkSession, col("toks_a"), col("toks_b")).as("jac_fs"))
+        jaccardFs(col("toks_a"), col("toks_b")).as("jac_fs"))
       .filter(col("jac_fs") >= minJaccardFs)
     (verified, shingled)
   }
@@ -418,19 +418,14 @@ object Dedup {
     * splits them into chunk keys for the hamming-bucketed candidate
     * join (pigeonhole: hamming < chunks ⇒ some chunk matches exactly).
     *
-    * Uses the native codegen'd Catalyst expression when the session
-    * has GraftExtensions (bit-identical, ~100× smaller expression
-    * tree); falls back to the pure-Column formulation otherwise.
+    * One native codegen'd expression per doc
+    * ([[graft.functions.HashFunctions.simhash64]]).
     */
   def simhashFingerprints(docs0: DataFrame, canonical: Boolean = false,
                           routed: Boolean = false,
                           minLossFs: Long = 0L): DataFrame = {
     val docs = Par.spread(canonDocs(docs0, canonical, routed, minLossFs))
-    val sh =
-      if (docs.sparkSession.catalog.functionExists("graft_simhash64"))
-        call_function("graft_simhash64", tokens(col("text")))
-      else simhash64(tokens(col("text")))
-    docs.select(col("doc_id"), sh.as("simhash"))
+    docs.select(col("doc_id"), simhash64(tokens(col("text"))).as("simhash"))
   }
 
   /** SimHash near-dup pairs within hamming ≤ maxHamming.
@@ -507,13 +502,12 @@ object Dedup {
     * rows-only by necessity — has a hash-checked gate key, the same
     * bridge [[minhashMd5Pairs]] built for the minhash family in r10.
     *
-    * Plan shape: tokens explode to slim (doc_id, digest-prefix) rows,
-    * ONE partial-agged groupBy reduces them to 64 per-doc bit sums
-    * (shuffle volume = 64 longs per doc regardless of doc length),
-    * chunks project map-side, and candidates route through the salted
-    * [[candidatePairs]] generator like every other LSH path here.
+    * Plan shape: the fingerprint is one map-side projection per doc
+    * ([[simhashMd5Fingerprints]], no shuffle), and candidates route
+    * through the salted [[candidatePairs]] generator like every other
+    * LSH path here.
     */
-  private val SimhashMd5Chunks = 4
+  private val SimhashMd5ChunkCount = 4
 
   /** The md5-simhash fingerprint as its four 16-bit chunk integers
     * (doc_id, c0..c3) — factored out so the spec can brute-force the
@@ -521,43 +515,18 @@ object Dedup {
     * [[simhashMd5Pairs]] recalls EXACTLY the ≤ maxHamming pairs.
     */
   private[graft] def simhashMd5Fingerprints(docs: DataFrame): DataFrame =
-    if (docs.sparkSession.catalog.functionExists("graft_simhash_md5_chunks")) {
-      // native per-doc kernel (r21): the token array is already
-      // per-doc in the scan projection, so the whole fingerprint is
-      // computable map-side — the explode + 64-column groupBy
-      // Exchange of the Column twin collapses into one scan-speed
-      // projection with bit-identical chunk values (parity
-      // spec-pinned). The isNotNull filter reproduces the twin's
-      // row set exactly: explode of a null doc emits no row.
-      docs.filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          call_function("graft_simhash_md5_chunks",
-            array_distinct(tokens(col("text")))).as("ch"))
-        .select(col("doc_id") +:
-          (0 until SimhashMd5Chunks).map(c => col(s"ch.c$c").as(s"c$c")): _*)
-    } else simhashMd5FingerprintsColumns(docs)
-
-  /** The explode + 64-bit-sum groupBy twin of the native fingerprint
-    * path — the fallback when the session lacks GraftExtensions, and
-    * the parity reference ExpressionsSpec pins the kernel against.
-    */
-  private[graft] def simhashMd5FingerprintsColumns(docs: DataFrame): DataFrame = {
-      val tok = docs
-        .select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("tok"))
-        .select(col("doc_id"), substring(md5(col("tok")), 1, 16).as("h"))
-      val bitSums = (0 until 64).map { j =>
-        val nib = conv(substring(col("h"), 1 + j / 4, 1), 16, 10).cast("int")
-        val bit = shiftright(nib, 3 - j % 4).bitwiseAND(lit(1))
-        sum(bit * lit(2) - lit(1)).as(s"s$j")
-      }
-      val chunkCols = (0 until SimhashMd5Chunks).map { c =>
-        (0 until 16).map { i =>
-          when(col(s"s${c * 16 + i}") > 0, lit(1L << i)).otherwise(lit(0L))
-        }.reduce(_ + _).as(s"c$c")
-      }
-      tok.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
-        .select(col("doc_id") +: chunkCols: _*)
-    }
+    // native per-doc kernel (r21): the token array is already per-doc
+    // in the scan projection, so the whole fingerprint is computable
+    // map-side — one scan-speed projection instead of an explode +
+    // 64-column groupBy Exchange, with bit-identical chunk values
+    // (parity spec against that twin in ExpressionsSpec). The
+    // isNotNull filter reproduces the twin's row set exactly: explode
+    // of a null doc emits no row.
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), ColumnBridge.column(SimhashMd5Chunks(
+        ColumnBridge.expression(array_distinct(tokens(col("text")))))).as("ch"))
+      .select(col("doc_id") +:
+        (0 until SimhashMd5ChunkCount).map(c => col(s"ch.c$c").as(s"c$c")): _*)
 
   def simhashMd5Pairs(docs0: DataFrame, maxHamming: Int = 3,
                       canonical: Boolean = false,
@@ -578,7 +547,7 @@ object Dedup {
     * generator, then the exact per-chunk bit_count(xor) verify.
     */
   private[graft] def chunkBandedPairs(fingerprints: DataFrame, maxHamming: Int): DataFrame = {
-    val chunks = SimhashMd5Chunks
+    val chunks = SimhashMd5ChunkCount
     // persist: the 4-chunk fingerprint frame feeds the band explode
     // AND both verify sides — the upstream fingerprint pass runs once.
     // The count() materializes it EAGERLY (r21): AQE submits the
@@ -642,7 +611,7 @@ object Dedup {
     a.join(b, col("a.lang") === col("b.lang") && col("a.lb") === col("b.lb") &&
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        jaccardFs(docs.sparkSession, col("a.toks"), col("b.toks")).as("jac_fs"))
+        jaccardFs(col("a.toks"), col("b.toks")).as("jac_fs"))
       .filter(col("jac_fs") >= thresholdFs)
   }
 
@@ -735,7 +704,7 @@ object Dedup {
     val gb = shingled.select(col("doc_id").as("id_b"), col("grams").as("grams_b"))
     val pairs = candidatePairs(banded, szBoundFs = thresholdFs).join(ga, "id_a").join(gb, "id_b")
       .select(col("id_a"), col("id_b"),
-        jaccardFs(docs0.sparkSession, col("grams_a"), col("grams_b")).as("jac_fs"))
+        jaccardFs(col("grams_a"), col("grams_b")).as("jac_fs"))
       .filter(col("jac_fs") >= thresholdFs)
     (pairs, shingled)
   }
@@ -1047,34 +1016,14 @@ object Dedup {
     * the HOF twin's array_position-of-array_min rule, spec-pinned).
     */
   private[graft] def latticeClusterCol(q: Column, cs: Seq[(Long, Array[Long])]): Column =
-    org.apache.spark.sql.graftshim.ColumnBridge.column(
-      graft.functions.expressions.LatticeArgmin(
-        org.apache.spark.sql.graftshim.ColumnBridge.expression(q),
-        cs.map(_._1).toArray, cs.map(_._2).toArray))
+    ColumnBridge.column(LatticeArgmin(ColumnBridge.expression(q),
+      cs.map(_._1).toArray, cs.map(_._2).toArray))
 
-  /** The interpreted-HOF twin of [[latticeClusterCol]] — the parity
-    * reference ExpressionsSpec pins the kernel against.
-    */
-  private[graft] def latticeClusterColColumns(q: Column, cs: Seq[(Long, Array[Long])]): Column = {
-    val ds = cs.map { case (_, c) =>
-      aggregate(zip_with(q, typedlit(c.toSeq), (a, b) => (a - b) * (a - b)),
-        lit(0L), (acc, x) => acc + x) }
-    val dArr = array(ds: _*)
-    val cidArr = typedlit(cs.map(_._1))
-    element_at(cidArr, array_position(dArr, array_min(dArr)).cast("int"))
-  }
-
-  /** Exact integer dot over array<long> — native kernel with the HOF
-    * twin alongside for the parity spec.
+  /** Exact integer dot over array<long> — native kernel (parity spec
+    * against the HOF fold in ExpressionsSpec).
     */
   private[graft] def latticeDot(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftshim.ColumnBridge.column(
-      graft.functions.expressions.ArrayLDot(
-        org.apache.spark.sql.graftshim.ColumnBridge.expression(a),
-        org.apache.spark.sql.graftshim.ColumnBridge.expression(b)))
-
-  private[graft] def latticeDotColumns(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
+    ColumnBridge.column(ArrayLDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** Cross-corpus candidate pairs from two banded frames: the
     * incoming×reference equi-join on (band, bucket) — the two-corpus
@@ -1182,7 +1131,7 @@ object Dedup {
     val verified = crossCandidatePairs(banded(si), banded(sr), szBoundFs = thresholdFs)
       .join(gi, "id_in").join(gr, "id_ref")
       .select(col("id_in"), col("id_ref"),
-        jaccardFs(incoming.sparkSession, col("grams_in"), col("grams_ref")).as("jac_fs"))
+        jaccardFs(col("grams_in"), col("grams_ref")).as("jac_fs"))
       .filter(col("jac_fs") >= thresholdFs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // eager: materialize the verified pair set (slim rows, volume ∝
@@ -1461,7 +1410,7 @@ object Dedup {
     val verified = indexCandidatePairs(bi, name)
       .join(gi, "id_in").join(gr, "id_ref")
       .select(col("id_in"), col("id_ref"),
-        jaccardFs(spark, col("grams_in"), col("grams_ref")).as("jac_fs"))
+        jaccardFs(col("grams_in"), col("grams_ref")).as("jac_fs"))
       .filter(col("jac_fs") >= thresholdFs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // eager: drop the incoming-batch cache here (same shape as

@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 
 import graft.functions.VectorFunctions._
+import graft.functions.expressions.{PqAdcTable, PqCodes}
 
 /** Product quantization (PQ) — the vector-COMPRESSION leg of the ANN
   * stack (Jégou et al. 2011), the piece that makes 100 TB of
@@ -51,7 +53,7 @@ object Pq {
       .filter(col("nrm") > 0)
       .select(col("vec_id"), transform(col("v0"), x => x / col("nrm")).as("v"))
 
-  private def subvec(v: Column, s: Int, dsub: Int): Column =
+  private[graft] def subvec(v: Column, s: Int, dsub: Int): Column =
     slice(v, s * dsub + 1, dsub)
 
   private def dist2(a: Array[Double], b: Array[Double]): Double = KMeans.dist2(a, b)
@@ -216,20 +218,7 @@ object Pq {
     * (parity spec in ExpressionsSpec).
     */
   private[graft] def codesExpr(v: Column, cb: Codebooks): Column =
-    org.apache.spark.sql.graftshim.ColumnBridge.column(
-      graft.functions.expressions.PqCodes(
-        org.apache.spark.sql.graftshim.ColumnBridge.expression(v),
-        cb.dsub, cb.ks, flatBooks(cb)))
-
-  /** The literal-centroid Column twin of [[codesExpr]] — the parity
-    * reference ExpressionsSpec pins the native kernel against.
-    */
-  private[graft] def codesExprColumns(v: Column, cb: Codebooks): Column =
-    array((0 until cb.m).map { s =>
-      val cents: KMeans.Centroids =
-        cb.books(s).zipWithIndex.map { case (c, i) => (i.toLong, c) }
-      KMeans.assignExpr(subvec(v, s, cb.dsub), cents)._1.cast("int")
-    }: _*)
+    ColumnBridge.column(PqCodes(ColumnBridge.expression(v), cb.dsub, cb.ks, flatBooks(cb)))
 
   /** The per-query ADC lookup table: all m·ks subspace distances of
     * `v` to every codebook centroid, flattened as `s·ks + code`.
@@ -238,20 +227,7 @@ object Pq {
     * (r21) — same collapse and parity story as [[codesExpr]].
     */
   private[graft] def adcTableExpr(v: Column, cb: Codebooks): Column =
-    org.apache.spark.sql.graftshim.ColumnBridge.column(
-      graft.functions.expressions.PqAdcTable(
-        org.apache.spark.sql.graftshim.ColumnBridge.expression(v),
-        cb.dsub, cb.ks, flatBooks(cb)))
-
-  /** The literal-centroid Column twin of [[adcTableExpr]] — the
-    * parity reference ExpressionsSpec pins the native kernel against.
-    */
-  private[graft] def adcTableExprColumns(v: Column, cb: Codebooks): Column =
-    array((0 until cb.m).flatMap { s =>
-      (0 until cb.ks).map { c =>
-        l2sq(subvec(v, s, cb.dsub), typedlit(cb.books(s)(c)))
-      }
-    }: _*)
+    ColumnBridge.column(PqAdcTable(ColumnBridge.expression(v), cb.dsub, cb.ks, flatBooks(cb)))
 
   /** ADC candidate score = Σ_s qtab[s·ks + codes[s]] — m element_at
     * lookups against the precomputed table, the whole point of PQ.

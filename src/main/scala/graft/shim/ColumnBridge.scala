@@ -5,12 +5,12 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge. Spark 4 hides the classic
-  * `ExpressionUtils` behind `private[sql]`; graft expressions that
-  * can't ride the SQL function registry (e.g. the broadcast-handle
-  * bloom probe — a `Broadcast` is not a `Column`) still need a Column
-  * wrapper, so this one-file subpackage of `org.apache.spark.sql`
-  * re-exports the two conversions — the standard extension-library
-  * idiom, no behavior of its own.
+  * `ExpressionUtils` behind `private[sql]`; graft's Column API builds
+  * every native expression it plans through this bridge (no SQL
+  * registry lookup, so no session setting decides the kernel), so this
+  * one-file subpackage of `org.apache.spark.sql` re-exports the two
+  * conversions — the standard extension-library idiom, no behavior of
+  * its own.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -2,18 +2,22 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.HashFunctions
+import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
 import graft.functions.TextFunctions.tokens
 
-/** Native Catalyst expressions vs their pure-Column twins. */
+/** Native Catalyst expressions vs their pure-Column twins
+  * ([[ColumnTwins]] or spelled inline). Each parity spec builds the
+  * native side through the public Column function operators call; the
+  * `spark.sql("SELECT graft_…")` edge cases cover the SQL registry.
+  */
 class ExpressionsSpec extends SparkSpec {
 
   test("native simhash64 is bit-identical to the Column formulation on real docs") {
     val docs = Tables.documents(spark, sfDir)
     val both = docs.select(
       col("doc_id"),
-      call_function("graft_simhash64", tokens(col("text"))).as("native"),
-      HashFunctions.simhash64(tokens(col("text"))).as("columnar"))
+      HashFunctions.simhash64(tokens(col("text"))).as("native"),
+      ColumnTwins.simhash64(tokens(col("text"))).as("columnar"))
     val diff = both.filter(col("native") =!= col("columnar")).count()
     assert(diff == 0, s"$diff docs disagree between native and Column simhash")
   }
@@ -34,7 +38,7 @@ class ExpressionsSpec extends SparkSpec {
     val colJac = floor(lit(10000.0) * (size(array_intersect(col("a.toks"), col("b.toks")))
       .cast("double") / size(array_union(col("a.toks"), col("b.toks")))))
     val diff = pairs.select(
-        call_function("graft_jaccard_fs", col("a.toks"), col("b.toks")).as("native"),
+        graft.operators.Dedup.jaccardFs(col("a.toks"), col("b.toks")).as("native"),
         colJac.as("columnar"))
       .filter(col("native") =!= col("columnar")).count()
     assert(diff == 0, s"$diff pairs disagree between native and Column jaccard")
@@ -89,8 +93,8 @@ class ExpressionsSpec extends SparkSpec {
 
   test("native dot/l2sq are bit-identical to the HOF twins on real embeddings") {
     import graft.functions.VectorFunctions.toDoubleArray
-    // HOF twins spelled out inline (VectorFunctions.dot now auto-picks
-    // the native kernel in this session, so the twin must be explicit)
+    // HOF twins spelled out inline (VectorFunctions.dot/l2sq build the
+    // native kernels)
     def hofDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
     def hofL2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
@@ -99,9 +103,9 @@ class ExpressionsSpec extends SparkSpec {
       .select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
     val pairs = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id")).limit(5000)
     val diff = pairs.select(
-        call_function("graft_dot", col("a.v"), col("b.v")).as("nd"),
+        VectorFunctions.dot(col("a.v"), col("b.v")).as("nd"),
         hofDot(col("a.v"), col("b.v")).as("cd"),
-        call_function("graft_l2sq", col("a.v"), col("b.v")).as("nl"),
+        VectorFunctions.l2sq(col("a.v"), col("b.v")).as("nl"),
         hofL2(col("a.v"), col("b.v")).as("cl"))
       .filter(col("nd") =!= col("cd") || col("nl") =!= col("cl")).count()
     assert(diff == 0, s"$diff pairs disagree between native and HOF vector kernels")
@@ -122,8 +126,8 @@ class ExpressionsSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
     val toks = array_distinct(tokens(col("text")))
     val both = docs.select(
-      call_function("graft_minhash_sig", toks, lit(32)).as("native"),
-      HashFunctions.minhashSignatureColumns(toks, 32).as("columnar"))
+      HashFunctions.minhashSignature(toks, 32).as("native"),
+      ColumnTwins.minhashSignature(toks, 32).as("columnar"))
     val diff = both.filter(col("native") =!= col("columnar")).count()
     assert(diff == 0, s"$diff docs disagree between native and Column minhash signature")
     // empty-array edge: all-null signature, same as array_min of empty
@@ -133,9 +137,8 @@ class ExpressionsSpec extends SparkSpec {
     // NULL-array edge: BOTH forms yield SQL NULL (the native expression
     // is null-intolerant; the Column twin wraps itself to match)
     val nulls = spark.range(1).select(
-      call_function("graft_minhash_sig",
-        lit(null).cast("array<string>"), lit(4)).as("native"),
-      HashFunctions.minhashSignatureColumns(lit(null).cast("array<string>"), 4).as("columnar"))
+      HashFunctions.minhashSignature(lit(null).cast("array<string>"), 4).as("native"),
+      ColumnTwins.minhashSignature(lit(null).cast("array<string>"), 4).as("columnar"))
       .collect()(0)
     assert(nulls.isNullAt(0) && nulls.isNullAt(1),
       s"null token array → SQL NULL signature in both forms, got $nulls")
@@ -146,7 +149,7 @@ class ExpressionsSpec extends SparkSpec {
     val toks = tokens(col("text"))
     val grams = graft.functions.TextFunctions.wordNgrams(toks, 2)
     val both = docs.select(
-      call_function("graft_ngram_stats", toks, lit(2)).as("native"),
+      TextFunctions.ngramStats(toks, 2).as("native"),
       struct(size(grams).cast("long").as("n_grams"),
         size(array_distinct(grams)).cast("long").as("n_uniq")).as("columnar"))
     val diff = both.filter(col("native") =!= col("columnar")).count()
@@ -176,7 +179,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("native script counts are bit-identical to the 17-regex Column twin, incl. edges") {
-    import graft.functions.TextFunctions
     // every named script + beyond-the-named-set (Gujarati → other), a
     // SUPPLEMENTARY-PLANE Han char (U+20000, arrives as a surrogate
     // pair — must count ONCE in n_han, the code-point-loop parity
@@ -193,15 +195,15 @@ class ExpressionsSpec extends SparkSpec {
         (col("id") + 900000L).as("doc_id"),
         element_at(typedlit(plants), (col("id") + 1).cast("int")).as("text")))
     val both = docs.select(
-      call_function("graft_script_counts", col("text")).as("native"),
-      TextFunctions.scriptCountsColumns(col("text")).as("columnar"))
+      TextFunctions.scriptCounts(col("text")).as("native"),
+      ColumnTwins.scriptCounts(col("text")).as("columnar"))
     val diff = both.filter(col("native") =!= col("columnar")).count()
     assert(diff == 0, s"$diff rows disagree between native and regex script counts")
     // null input: native → NULL struct, twin → struct of NULL fields;
     // every consumer reads FIELDS, where both forms agree (null)
     val nulls = spark.range(1).select(
-      call_function("graft_script_counts", lit(null).cast("string")).getField("n_han").as("n"),
-      TextFunctions.scriptCountsColumns(lit(null).cast("string")).getField("n_han").as("c"))
+      TextFunctions.scriptCounts(lit(null).cast("string")).getField("n_han").as("n"),
+      ColumnTwins.scriptCounts(lit(null).cast("string")).getField("n_han").as("c"))
       .collect()(0)
     assert(nulls.isNullAt(0) && nulls.isNullAt(1), s"null text → null fields on both paths: $nulls")
     // supplementary-plane pin: U+20000 is ONE Han code point
@@ -215,8 +217,8 @@ class ExpressionsSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
     val toks = array_distinct(tokens(col("text")))
     val both = docs.select(
-      call_function("graft_md5_minhash_sig", toks, lit(32)).as("native"),
-      HashFunctions.md5MinhashSigColumns(toks, 32).as("columnar"))
+      HashFunctions.md5MinhashSig(toks, 32).as("native"),
+      ColumnTwins.md5MinhashSig(toks, 32).as("columnar"))
     val diff = both.filter(col("native") =!= col("columnar")).count()
     assert(diff == 0, s"$diff docs disagree between native and Column md5 minhash signature")
     // empty array → all-null signature (array_min of empty per perm)
@@ -225,18 +227,18 @@ class ExpressionsSpec extends SparkSpec {
     assert(empty.size == 4 && empty.forall(_ == null), s"empty input → all-null sig, got $empty")
     // null ELEMENT drops out of every minimum on both paths
     val withNull = spark.range(1).select(
-      call_function("graft_md5_minhash_sig",
-        array(lit("a"), lit(null).cast("string"), lit("b")), lit(8)).as("native"),
-      HashFunctions.md5MinhashSigColumns(
+      HashFunctions.md5MinhashSig(
+        array(lit("a"), lit(null).cast("string"), lit("b")), 8).as("native"),
+      ColumnTwins.md5MinhashSig(
         array(lit("a"), lit(null).cast("string"), lit("b")), 8).as("columnar"),
-      call_function("graft_md5_minhash_sig", array(lit("a"), lit("b")), lit(8)).as("clean"))
+      HashFunctions.md5MinhashSig(array(lit("a"), lit("b")), 8).as("clean"))
       .collect()(0)
     assert(withNull.getSeq[Any](0) == withNull.getSeq[Any](1), "null element: native ≠ twin")
     assert(withNull.getSeq[Any](0) == withNull.getSeq[Any](2), "null element must not vote")
     // NULL array → SQL NULL on both paths
     val nulls = spark.range(1).select(
-      call_function("graft_md5_minhash_sig", lit(null).cast("array<string>"), lit(4)).as("n"),
-      HashFunctions.md5MinhashSigColumns(lit(null).cast("array<string>"), 4).as("c"))
+      HashFunctions.md5MinhashSig(lit(null).cast("array<string>"), 4).as("n"),
+      ColumnTwins.md5MinhashSig(lit(null).cast("array<string>"), 4).as("c"))
       .collect()(0)
     assert(nulls.isNullAt(0) && nulls.isNullAt(1), s"null array → SQL NULL both paths: $nulls")
   }
@@ -244,7 +246,7 @@ class ExpressionsSpec extends SparkSpec {
   test("native simhash md5 fingerprints match the explode+groupBy twin doc-for-doc") {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val native = graft.operators.Dedup.simhashMd5Fingerprints(docs)
-    val twin = graft.operators.Dedup.simhashMd5FingerprintsColumns(docs)
+    val twin = ColumnTwins.simhashMd5Fingerprints(docs)
     assert(native.count() == twin.count(), "fingerprint row sets differ")
     val joined = native.as("n").join(twin.as("t"), "doc_id")
     val diff = joined.filter((0 until 4).map(c =>
@@ -266,9 +268,9 @@ class ExpressionsSpec extends SparkSpec {
     val pts = Pq.normalized(emb)
     val both = pts.select(
       Pq.codesExpr(col("v"), cb).as("nc"),
-      Pq.codesExprColumns(col("v"), cb).as("cc"),
+      ColumnTwins.pqCodes(col("v"), cb).as("cc"),
       Pq.adcTableExpr(col("v"), cb).as("nt"),
-      Pq.adcTableExprColumns(col("v"), cb).as("ct"))
+      ColumnTwins.pqAdcTable(col("v"), cb).as("ct"))
     val diff = both.filter(col("nc") =!= col("cc") || col("nt") =!= col("ct")).count()
     assert(diff == 0, s"$diff vectors disagree between native and literal-centroid PQ kernels")
     // null vector → SQL NULL from the native kernels
@@ -292,9 +294,9 @@ class ExpressionsSpec extends SparkSpec {
       .map { case (r, i) => i.toLong -> r.getAs[scala.collection.Seq[Long]]("q").toArray }.toSeq
     val both = pts.select(
       Dedup.latticeClusterCol(col("q"), cents).as("nc"),
-      Dedup.latticeClusterColColumns(col("q"), cents).as("cc"),
+      ColumnTwins.latticeClusterCol(col("q"), cents).as("cc"),
       Dedup.latticeDot(col("q"), col("q")).as("nd"),
-      Dedup.latticeDotColumns(col("q"), col("q")).as("cd"))
+      ColumnTwins.latticeDot(col("q"), col("q")).as("cd"))
     val diff = both.filter(col("nc") =!= col("cc") || col("nd") =!= col("cd")).count()
     assert(diff == 0, s"$diff rows disagree between native and HOF lattice kernels")
     // exact-tie pin: a point equidistant to two centroids takes the
@@ -302,16 +304,15 @@ class ExpressionsSpec extends SparkSpec {
     val twoCents = Seq(0L -> Array(0L, 0L), 1L -> Array(2L, 0L))
     val tie = spark.range(1).select(typedlit(Seq(1L, 0L)).as("q"))
       .select(Dedup.latticeClusterCol(col("q"), twoCents).as("n"),
-        Dedup.latticeClusterColColumns(col("q"), twoCents).as("c")).collect()(0)
+        ColumnTwins.latticeClusterCol(col("q"), twoCents).as("c")).collect()(0)
     assert(tie.getLong(0) == 0L && tie.getLong(1) == 0L, s"tie must take cid 0: $tie")
   }
 
   test("native distinct ngrams match the HOF chain on real docs, plus edges") {
-    import graft.functions.TextFunctions
     val docs = Tables.documents(spark, sfDir)
     val toks = tokens(col("text"))
     val both = docs.select(
-      call_function("graft_distinct_ngrams", toks, lit(2)).as("native"),
+      TextFunctions.distinctWordNgrams(toks, 2).as("native"),
       array_distinct(TextFunctions.wordNgrams(toks, 2)).as("columnar"))
     val diff = both.filter(col("native") =!= col("columnar")).count()
     assert(diff == 0, s"$diff docs disagree between native and HOF distinct ngrams")
@@ -328,7 +329,7 @@ class ExpressionsSpec extends SparkSpec {
     // NULL array: kernel → SQL NULL, HOF chain → empty array; the
     // consumer filter/explode drops the row on both paths — pin that
     val nulls = spark.range(1).select(
-      call_function("graft_distinct_ngrams", lit(null).cast("array<string>"), lit(2)).as("n"),
+      TextFunctions.distinctWordNgrams(lit(null).cast("array<string>"), 2).as("n"),
       array_distinct(TextFunctions.wordNgrams(lit(null).cast("array<string>"), 2)).as("c"))
     val survivors = nulls.select(
       (size(col("n")) > 0).as("nk"), (size(col("c")) > 0).as("ck")).collect()(0)
@@ -336,9 +337,48 @@ class ExpressionsSpec extends SparkSpec {
     assert(!survivors.getBoolean(1), "null input must not survive the size filter (twin)")
   }
 
+  test("operators build the native kernels whatever the active session") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.graftshim.ColumnBridge
+    import graft.functions.expressions._
+    import graft.operators.Dedup
+    val toks = tokens(col("text"))
+    val (a, b) = (col("a"), col("b"))
+    // no active session on this thread: a kernel choice that consulted
+    // the active session's function catalog would plan the twins here
+    val built: Seq[(Expression, Class[_])] =
+      try {
+        SparkSession.clearActiveSession()
+        Seq(
+          HashFunctions.md5MinhashSig(toks, 32) -> classOf[Md5MinHashSig],
+          HashFunctions.minhashSignature(toks, 32) -> classOf[MinHashSig],
+          TextFunctions.distinctWordNgrams(toks, 2) -> classOf[DistinctNgrams],
+          TextFunctions.ngramStats(toks, 2) -> classOf[NgramStats],
+          TextFunctions.scriptCounts(col("text")) -> classOf[ScriptCounts],
+          VectorFunctions.dot(a, b) -> classOf[ArrayDot],
+          VectorFunctions.l2sq(a, b) -> classOf[ArrayL2Sq])
+          .map { case (c, k) => ColumnBridge.expression(c) -> k }
+      } finally SparkSession.setActiveSession(spark)
+    built.foreach { case (e, k) =>
+      assert(e.getClass == k, s"expected ${k.getSimpleName}, built ${e.getClass.getSimpleName}")
+    }
+    // operator plans on the shared session carry the same nodes
+    def nodes(df: org.apache.spark.sql.DataFrame): Set[Class[_]] =
+      df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect { case e => e.getClass }))
+        .toSet
+    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+    assert(nodes(Dedup.simhashFingerprints(docs)).contains(classOf[SimHash64]))
+    val pairs = Dedup.minhashMd5PairsUnsorted(docs)
+    val pairNodes = nodes(pairs)
+    assert(pairNodes.contains(classOf[Md5MinHashSig]) && pairNodes.contains(classOf[ArrayJaccardFs]),
+      s"minhash-md5 pairs plan lacks the native signature/jaccard nodes: $pairNodes")
+    pairs.count() // the action releases the operator's scoped shingle cache
+  }
+
   test("native simhash stays inside whole-stage codegen") {
     val docs = Tables.documents(spark, sfDir)
-    val plan = docs.select(call_function("graft_simhash64", tokens(col("text"))))
+    val plan = docs.select(HashFunctions.simhash64(tokens(col("text"))))
       .queryExecution.executedPlan.toString
     // the "*(n)" prefix marks operators fused into WholeStageCodegen
     assert(plan.contains("*(1) Project [graft_simhash64"), s"expected codegen'd project in:\n$plan")
